@@ -1,7 +1,8 @@
 """Distributed inverted-index builder — the Spark-first reimagining of
 Lucene's IndexWriter flush/merge pipeline (SURVEY.md §2.A, §3.1).
 
-Dataflow (two shuffles total, mirroring DWPT-flush + merge):
+Dataflow (two data shuffles, mirroring DWPT-flush + merge; the small
+run-header aggregates for the terms table aside):
 
   docs(repo,path,commit,lang,content)
     -> repartitionByRange(repo,path,commit) + sortWithinPartitions   [shuffle 1: doc -> segment]
@@ -16,14 +17,20 @@ Dataflow (two shuffles total, mirroring DWPT-flush + merge):
                                                 16MB RAM trigger IndexWriterConfig.java:83)
     -> docmap table (meta rows)                (segment docIDs + .nvd norms)
     -> groupBy(term).agg over run headers -> terms table (df/cf + impact bounds)
-    -> groupBy(term, salt).applyInPandas merge runs -> 256-doc blocks
+    -> merge_postings: salted runs placed by sampled term-range bounds
+       + sortWithinPartitions(term, salt, first_doc)
                                                [shuffle 2: segment -> term]
+       -> ONE mapInPandas pass per partition merges every (term, salt)
+          group (group boundaries found with numpy per Arrow batch, no
+          per-term Python call) into 256-doc blocks
        (SegmentMerger's k-way merge, index/SegmentMerger.java:114-151 —
         runs hold disjoint, ascending docID ranges, so the merge is pure
         concatenation in first_doc order: no re-sort, no docBase remap;
         block encode = Lucene104PostingsWriter.java:237-359)
-    -> postings table, range-partitioned+sorted by term (parquet min/max
-       stats replace the block-tree term dictionary)
+    -> postings table, written straight from the merge: already
+       range-partitioned and sorted by (term, salt, block_seq), so no
+       shuffle after the merge (parquet min/max stats replace the
+       block-tree term dictionary)
     -> stats table (IndexSearcher.collectionStatistics analog,
        search/IndexSearcher.java:1134-1148)
     -> manifest.json written atomically last   (segments_N two-phase commit,
@@ -856,56 +863,61 @@ def _invert_partition(
     return fn
 
 
-def _merge_runs_to_blocks(key, pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel for one (term, salt) group: concatenate the
-    group's posting runs in first_doc order (runs hold disjoint ascending
-    docID ranges -> already globally sorted) and emit <=256-doc varbyte
-    blocks with impact metadata."""
-    term, salt = key
-    pdf = pdf.sort_values("first_doc")
+BLOCK_COLS = [f.name for f in BLOCK_SCHEMA.fields]
+# merge input, one row per posting run: (term, salt) group key, the sort
+# key within a group, then the run's payload columns
+_MERGE_IN_COLS = [
+    "term", "salt", "first_doc",
+    "docs_vb", "tfs_vb", "norms_b", "pos_vb", "offs_vb", "olen_vb", "pay_vb",
+]
+_PAYLOAD_COLS = _MERGE_IN_COLS[3:]
+
+
+def _merge_group(
+    term, salt, docs_vb, tfs_vb, norms_b, pos_vb, offs_vb, olen_vb, pay_vb
+) -> list[tuple]:
+    """Merge kernel for one (term, salt) group: the group's posting runs,
+    given as parallel column slices ALREADY in first_doc order, are
+    concatenated (runs hold disjoint ascending docID ranges -> already
+    globally sorted) and re-cut into <=256-doc varbyte blocks with impact
+    metadata. Returns BLOCK_COLS-ordered row tuples."""
+    n = len(docs_vb)
     doc_parts, tf_parts, norm_parts, pos_parts = [], [], [], []
     off_parts, olen_parts, pay_parts = [], [], []
-    has_pos = False
-    has_offs = False
-    has_pays = False
-    for r in pdf.itertuples():
-        d = delta_decode(decode(bytes(r.docs_vb)))
-        t = decode(bytes(r.tfs_vb))
+    for i in range(n):
+        d = delta_decode(decode(bytes(docs_vb[i])))
+        t = decode(bytes(tfs_vb[i]))
         doc_parts.append(d)
         tf_parts.append(t)
-        norm_parts.append(np.frombuffer(bytes(r.norms_b), dtype=np.uint8))
-        if r.pos_vb:
-            has_pos = True
-            pos_parts.append(segmented_delta_decode(decode(bytes(r.pos_vb)), t))
-        # offs_vb/olen_vb absent on runs written before the offsets option
-        if getattr(r, "offs_vb", b""):
-            has_offs = True
+        norm_parts.append(np.frombuffer(bytes(norms_b[i]), dtype=np.uint8))
+        if pos_vb[i]:
+            pos_parts.append(segmented_delta_decode(decode(bytes(pos_vb[i])), t))
+        if offs_vb[i]:
             off_parts.append(
-                segmented_delta_decode(decode(bytes(r.offs_vb)), t)
+                segmented_delta_decode(decode(bytes(offs_vb[i])), t)
             )
-            olen_parts.append(decode(bytes(r.olen_vb)))
-        # pay_vb absent on runs written before the payloads option
-        if getattr(r, "pay_vb", b""):
-            has_pays = True
-            pay_parts.append(decode(bytes(r.pay_vb)))
+            olen_parts.append(decode(bytes(olen_vb[i])))
+        if pay_vb[i]:
+            pay_parts.append(decode(bytes(pay_vb[i])))
+    has_pos, has_offs, has_pays = bool(pos_parts), bool(off_parts), bool(pay_parts)
     # Mixed-payload guard: occ_ends indexes the FULL run concatenation,
     # so if only SOME runs carry positions/offsets the flat arrays are
     # silently misaligned against it. write_segment pins the index-wide
     # options (index_options.json) so this can only mean corruption or a
     # hand-mixed layout — fail loudly rather than emit garbage payloads.
-    if has_pos and len(pos_parts) != len(pdf):
+    if has_pos and len(pos_parts) != n:
         raise ValueError(
-            f"term {term!r}: {len(pos_parts)}/{len(pdf)} runs carry "
+            f"term {term!r}: {len(pos_parts)}/{n} runs carry "
             "positions — segments were written with mixed store_positions"
         )
-    if has_offs and len(off_parts) != len(pdf):
+    if has_offs and len(off_parts) != n:
         raise ValueError(
-            f"term {term!r}: {len(off_parts)}/{len(pdf)} runs carry "
+            f"term {term!r}: {len(off_parts)}/{n} runs carry "
             "offsets — segments were written with mixed store_offsets"
         )
-    if has_pays and len(pay_parts) != len(pdf):
+    if has_pays and len(pay_parts) != n:
         raise ValueError(
-            f"term {term!r}: {len(pay_parts)}/{len(pdf)} runs carry "
+            f"term {term!r}: {len(pay_parts)}/{n} runs carry "
             "payloads — segments were written with mixed store_payloads"
         )
     doc_ids = np.concatenate(doc_parts)
@@ -928,15 +940,15 @@ def _merge_runs_to_blocks(key, pdf: pd.DataFrame) -> pd.DataFrame:
         o0 = occ_ends[start - 1] if start else 0
         o1 = occ_ends[end - 1]
         if has_pos:
-            pos_vb = encode(segmented_delta_encode(pos_flat[o0:o1], t))
+            p_vb = encode(segmented_delta_encode(pos_flat[o0:o1], t))
         else:
-            pos_vb = b""
+            p_vb = b""
         if has_offs:
-            offs_vb = encode(segmented_delta_encode(off_flat[o0:o1], t))
-            olen_vb = encode(olen_flat[o0:o1])
+            o_vb = encode(segmented_delta_encode(off_flat[o0:o1], t))
+            l_vb = encode(olen_flat[o0:o1])
         else:
-            offs_vb, olen_vb = b"", b""
-        pay_vb = encode(pay_flat[o0:o1]) if has_pays else b""
+            o_vb, l_vb = b"", b""
+        y_vb = encode(pay_flat[o0:o1]) if has_pays else b""
         rows.append(
             (
                 term,
@@ -952,20 +964,114 @@ def _merge_runs_to_blocks(key, pdf: pd.DataFrame) -> pd.DataFrame:
                 encode(delta_encode(d)),
                 encode(t),
                 nb.astype(np.uint8).tobytes(),
-                pos_vb,
-                offs_vb,
-                olen_vb,
-                pay_vb,
+                p_vb,
+                o_vb,
+                l_vb,
+                y_vb,
             )
         )
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "term", "salt", "block_seq", "ndocs", "min_doc", "max_doc",
-            "max_tf", "min_norm", "min_tf", "max_norm",
-            "docs_vb", "tfs_vb", "norms_b", "pos_vb", "offs_vb", "olen_vb",
-            "pay_vb",
-        ],
+    return rows
+
+
+def _merge_runs_to_blocks(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    """One (term, salt) group's runs, in any row order, -> its block rows
+    (the _merge_group kernel on a standalone DataFrame). Payload columns
+    absent from ``pdf`` (runs written before the offsets/payloads
+    options) count as empty."""
+    term, salt = key
+    pdf = pdf.sort_values("first_doc")
+    empty = [b""] * len(pdf)
+    cols = [pdf[c].tolist() if c in pdf.columns else empty for c in _PAYLOAD_COLS]
+    return pd.DataFrame(_merge_group(term, salt, *cols), columns=BLOCK_COLS)
+
+
+def _merge_partition(batches):
+    """mapInPandas kernel over a partition of runs sorted by (term, salt,
+    first_doc): group boundaries come from one numpy comparison per
+    Arrow batch, each group is merged from column slices, and each batch
+    yields ONE block DataFrame. The batch's last group may continue in
+    the next batch, so it is carried over and merged once complete."""
+    carry = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        terms = pdf["term"].to_numpy(dtype=object)
+        salts = pdf["salt"].to_numpy(dtype=np.int64)
+        if not terms.size:
+            continue
+        starts = np.flatnonzero(
+            np.concatenate(
+                ([True], (terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1]))
+            )
+        )
+        carry = pdf.iloc[starts[-1]:]
+        cols = [pdf[c].tolist() for c in _PAYLOAD_COLS]
+        rows = []
+        for s, e in zip(starts[:-1], starts[1:]):
+            rows.extend(
+                _merge_group(terms[s], salts[s], *(c[s:e] for c in cols))
+            )
+        if rows:
+            yield pd.DataFrame(rows, columns=BLOCK_COLS)
+    if carry is not None:
+        yield pd.DataFrame(
+            _merge_group(
+                carry["term"].iat[0],
+                carry["salt"].iat[0],
+                *(carry[c].tolist() for c in _PAYLOAD_COLS),
+            ),
+            columns=BLOCK_COLS,
+        )
+
+
+def merge_postings(
+    spark: SparkSession,
+    runs: DataFrame,
+    terms: DataFrame,
+    out_path: str,
+    n_part: int,
+    *,
+    n_terms: int | None = None,
+    seed: int = 42,
+) -> None:
+    """Merge salted posting runs into 256-doc blocks and write them to
+    ``out_path`` as the postings table — the one merge every index write
+    path (batch build, resumable merge, NRT refresh, compaction) goes
+    through.
+
+    ``runs`` carries _MERGE_IN_COLS (the skew ``salt`` already attached);
+    ``terms`` is a table with a ``term`` column (``n_terms`` rows, counted
+    when not given) whose count-bounded sample sets the term-range
+    boundaries. Runs are placed by term range on exactly ``n_part``
+    partitions (explicit placement: AQE does not coalesce it), sorted by
+    (term, salt, first_doc) within each, and merged by one mapInPandas
+    pass — no per-term Python call, no shuffle of the merged blocks,
+    which leave the kernel already placed and in (term, salt, block_seq)
+    order. Parquet min/max stats on the range-partitioned files are the
+    term dictionary."""
+    if n_terms is None:
+        n_terms = terms.count()
+    # count-bounded vocabulary sample: 0.2 of a web-scale vocabulary
+    # would collect 10^9+ terms driver-side
+    frac = min(0.2, KEY_SAMPLE_MAX / max(1.0, float(n_terms)))
+    bounds = _quantile_bounds(
+        sorted(
+            r["term"]
+            for r in terms.select("term")
+            .sample(fraction=min(1.0, frac), seed=seed)
+            .collect()
+        ),
+        n_part,
+    )
+    placed = _repartition_exact(
+        spark, _with_range_id(runs.select(*_MERGE_IN_COLS), bounds, ["term"]), n_part
+    )
+    (
+        placed.sortWithinPartitions("term", "salt", "first_doc")
+        .drop("rpid")
+        .mapInPandas(_merge_partition, schema=BLOCK_SCHEMA)
+        .write.mode("overwrite")
+        .parquet(out_path)
     )
 
 
@@ -1377,33 +1483,16 @@ def build_index(
     _mark("terms_agg", _t)
 
     # --- shuffle 2: merge runs into postings blocks (salted hot terms) ---
-    salted = _salt_runs(runs, hot_df, n_hot_terms, hot_salt_span)
-    blocks = salted.groupBy("term", "salt").applyInPandas(
-        _merge_runs_to_blocks, schema=BLOCK_SCHEMA
-    )
-    # range-partition the output by term (the parquet file/rowgroup min-max
-    # stats ARE our term dictionary) — boundaries come from the cached
-    # terms table, so the expensive merge runs exactly once
-    # count-bounded vocabulary sample (distinct_terms is already known):
-    # 0.2 of a web-scale vocabulary would collect 10^9+ terms driverside
-    term_frac = min(0.2, KEY_SAMPLE_MAX / max(1.0, float(stats["distinct_terms"])))
-    term_bounds = _quantile_bounds(
-        sorted(
-            r["term"]
-            for r in terms_df.select("term")
-            .sample(fraction=min(1.0, term_frac), seed=seed)
-            .collect()
-        ),
+    # term-range boundaries come from the cached terms table, so the
+    # expensive merge runs exactly once
+    merge_postings(
+        spark,
+        _salt_runs(runs, hot_df, n_hot_terms, hot_salt_span),
+        terms_df,
+        os.path.join(out_dir, "postings"),
         n_part,
-    )
-    (
-        _repartition_exact(
-            spark, _with_range_id(blocks, term_bounds, ["term"]), n_part
-        )
-        .sortWithinPartitions("term", "salt", "block_seq")
-        .drop("rpid")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "postings"))
+        n_terms=stats["distinct_terms"],
+        seed=seed,
     )
     _mark("postings_write", _t)
 

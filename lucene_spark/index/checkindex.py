@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from lucene_spark.util.blockcodec import decode_block as decode
 from lucene_spark.util.blockcodec import validate_manifest_codec
+from lucene_spark.util.metaio import terms_path
 from lucene_spark.util.varbyte import delta_decode, segmented_delta_decode
 
 
@@ -118,7 +119,7 @@ def check_index(spark: SparkSession, index_dir: str, full: bool = False) -> dict
         )
 
     # -- 4. terms table vs block metadata ----------------------------------
-    terms = spark.read.parquet(os.path.join(index_dir, "terms"))
+    terms = spark.read.parquet(terms_path(index_dir, manifest))
     recomputed = meta.groupBy("term").agg(
         F.sum("ndocs").cast("long").alias("r_df"),
         F.max("max_tf").alias("r_max_tf"),

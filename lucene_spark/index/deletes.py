@@ -31,11 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lucene_spark.index.builder import (
-    BLOCK_SCHEMA,
-    BLOCK_SIZE,
-    _merge_runs_to_blocks,
-)
+from lucene_spark.index.builder import BLOCK_COLS, BLOCK_SCHEMA
 from lucene_spark.util.blockcodec import decode_block as decode
 from lucene_spark.util.blockcodec import encode_block as encode
 from lucene_spark.util.blockcodec import validate_manifest_codec
@@ -154,56 +150,61 @@ def expunge_deletes(spark: SparkSession, index_dir: str) -> dict:
         flat2 = np.concatenate(parts) if parts else np.empty(0, np.int64)
         return encode(segmented_delta_encode(flat2, t2) if delta else flat2)
 
-    def filter_blocks(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def filter_blocks(batches):
+        """Each block row on its own: kept verbatim, rewritten without
+        its tombstoned docs (block_seq unchanged), or dropped."""
         dele = del_b.value
-        rows = []
-        term, salt = key
-        for r in pdf.sort_values("block_seq").itertuples():
-            # offs/pay columns absent on indexes built before those options
-            offs_vb0 = bytes(getattr(r, "offs_vb", b"") or b"")
-            olen_vb0 = bytes(getattr(r, "olen_vb", b"") or b"")
-            pay_vb0 = bytes(getattr(r, "pay_vb", b"") or b"")
-            d = delta_decode(decode(bytes(r.docs_vb)))
-            keep = ~np.isin(d, dele)
-            if keep.all():
-                rows.append((term, int(salt), int(r.block_seq), int(r.ndocs),
-                             int(r.min_doc), int(r.max_doc), int(r.max_tf),
-                             int(r.min_norm),
-                             int(getattr(r, "min_tf", 1)),
-                             int(getattr(r, "max_norm", 255)),
-                             bytes(r.docs_vb), bytes(r.tfs_vb),
-                             bytes(r.norms_b), bytes(r.pos_vb),
-                             offs_vb0, olen_vb0, pay_vb0))
-                continue
-            if not keep.any():
-                continue
-            t = decode(bytes(r.tfs_vb))
-            nb = np.frombuffer(bytes(r.norms_b), dtype=np.uint8)
-            d2, t2, nb2 = d[keep], t[keep], nb[keep]
-            pos_vb = (
-                _seg_keep(r.pos_vb, t, t2, keep, delta=True) if r.pos_vb else b""
-            )
-            offs_vb = (
-                _seg_keep(offs_vb0, t, t2, keep, delta=True) if offs_vb0 else b""
-            )
-            olen_vb = (
-                _seg_keep(olen_vb0, t, t2, keep, delta=False) if olen_vb0 else b""
-            )
-            pay_vb = (
-                _seg_keep(pay_vb0, t, t2, keep, delta=False) if pay_vb0 else b""
-            )
-            rows.append((term, int(salt), int(r.block_seq), int(d2.size),
-                         int(d2[0]), int(d2[-1]), int(t2.max()), int(nb2.min()),
-                         int(t2.min()), int(nb2.max()),
-                         encode(delta_encode(d2)), encode(t2),
-                         nb2.tobytes(), pos_vb, offs_vb, olen_vb, pay_vb))
-        return pd.DataFrame(rows, columns=[f.name for f in BLOCK_SCHEMA.fields])
+        for pdf in batches:
+            rows = []
+            for r in pdf.itertuples():
+                # offs/pay columns absent on indexes built before those options
+                offs_vb0 = bytes(getattr(r, "offs_vb", b"") or b"")
+                olen_vb0 = bytes(getattr(r, "olen_vb", b"") or b"")
+                pay_vb0 = bytes(getattr(r, "pay_vb", b"") or b"")
+                d = delta_decode(decode(bytes(r.docs_vb)))
+                keep = ~np.isin(d, dele)
+                if keep.all():
+                    rows.append((r.term, int(r.salt), int(r.block_seq), int(r.ndocs),
+                                 int(r.min_doc), int(r.max_doc), int(r.max_tf),
+                                 int(r.min_norm),
+                                 int(getattr(r, "min_tf", 1)),
+                                 int(getattr(r, "max_norm", 255)),
+                                 bytes(r.docs_vb), bytes(r.tfs_vb),
+                                 bytes(r.norms_b), bytes(r.pos_vb),
+                                 offs_vb0, olen_vb0, pay_vb0))
+                    continue
+                if not keep.any():
+                    continue
+                t = decode(bytes(r.tfs_vb))
+                nb = np.frombuffer(bytes(r.norms_b), dtype=np.uint8)
+                d2, t2, nb2 = d[keep], t[keep], nb[keep]
+                pos_vb = (
+                    _seg_keep(r.pos_vb, t, t2, keep, delta=True) if r.pos_vb else b""
+                )
+                offs_vb = (
+                    _seg_keep(offs_vb0, t, t2, keep, delta=True) if offs_vb0 else b""
+                )
+                olen_vb = (
+                    _seg_keep(olen_vb0, t, t2, keep, delta=False) if olen_vb0 else b""
+                )
+                pay_vb = (
+                    _seg_keep(pay_vb0, t, t2, keep, delta=False) if pay_vb0 else b""
+                )
+                rows.append((r.term, int(r.salt), int(r.block_seq), int(d2.size),
+                             int(d2[0]), int(d2[-1]), int(t2.max()), int(nb2.min()),
+                             int(t2.min()), int(nb2.max()),
+                             encode(delta_encode(d2)), encode(t2),
+                             nb2.tobytes(), pos_vb, offs_vb, olen_vb, pay_vb))
+            if rows:
+                yield pd.DataFrame(rows, columns=BLOCK_COLS)
 
+    # map-only: every block row is edited on its own, so no shuffle and
+    # no per-term call; the sort keeps each output file in (term, salt,
+    # block_seq) order
     postings = spark.read.parquet(os.path.join(index_dir, "postings"))
     tmp = os.path.join(index_dir, "postings_expunged")
     (
-        postings.groupBy("term", "salt")
-        .applyInPandas(filter_blocks, schema=BLOCK_SCHEMA)
+        postings.mapInPandas(filter_blocks, schema=BLOCK_SCHEMA)
         .sortWithinPartitions("term", "salt", "block_seq")
         .write.mode("overwrite").parquet(tmp)
     )

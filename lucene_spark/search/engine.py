@@ -46,6 +46,7 @@ from lucene_spark.analysis import analyze
 from lucene_spark.search.bm25 import BM25Scorer, idf
 from lucene_spark.util.blockcodec import decode_block as decode
 from lucene_spark.util.blockcodec import validate_manifest_codec
+from lucene_spark.util.metaio import terms_path
 from lucene_spark.util.varbyte import delta_decode, segmented_delta_decode
 
 def _pos_shift(max_pos: int, headroom: int, floor_bits: int = 21) -> np.int64:
@@ -105,7 +106,7 @@ class IndexSearcher:
             self._postings = self._postings.filter(
                 F.col("gen").isin(list(self.manifest["gens"]))
             )
-        self._terms = spark.read.parquet(os.path.join(index_dir, "terms"))
+        self._terms = spark.read.parquet(terms_path(index_dir, self.manifest))
         self._token_filters = tuple(self.manifest.get("token_filters", ()))
         self._dl_hist: tuple[np.ndarray, np.ndarray] | None = None
         # per-reader TermStates cache (term -> TermStats | None-for-absent)
@@ -2866,16 +2867,15 @@ class IndexSearcher:
         member terms are disjoint by construction (one token per
         position), so the merge is flatten + sort with no dedup.
 
-        Plan shape: each member decode is the map-only positions kernel;
+        Plan shape: ONE map-only positions-kernel scan decodes every
+        member term (a union of one scan per member grew the plan with
+        the expansion count — hundreds of scans for a wildcard slot);
         the merge is ONE partial-aggregated groupBy over only the clause
         terms' postings rows — cost bounded by the clause's summed df,
         never the corpus."""
         if len(clause) == 1:
             return self._positions_side(clause[0])
-        un = self._positions_side(clause[0])
-        for t in clause[1:]:
-            un = un.unionByName(self._positions_side(t))
-        return un.groupBy("docID").agg(
+        return self._positions_side(*clause).groupBy("docID").agg(
             F.first("norm").alias("norm"),
             F.array_sort(F.flatten(F.collect_list("positions"))).alias(
                 "positions"
@@ -2913,10 +2913,11 @@ class IndexSearcher:
                 joined = joined.join(side, "docID")
         return self._strip_deleted(joined)
 
-    def _positions_side(self, term: str) -> DataFrame:
-        """One term's postings decoded to (docID, norm, positions) rows,
-        with the tombstone set applied INSIDE the decode kernel (the
-        decode-kernel liveness contract — every new kernel captures
+    def _positions_side(self, *terms: str) -> DataFrame:
+        """The terms' postings decoded to (docID, norm, positions) rows —
+        one row per (term, doc), from ONE scan whatever the number of
+        terms — with the tombstone set applied INSIDE the decode kernel
+        (the decode-kernel liveness contract — every new kernel captures
         self._deleted_bc and filters before emitting)."""
         pos_row_schema = StructType(
             [
@@ -2960,7 +2961,7 @@ class IndexSearcher:
                 )
 
         return (
-            self._postings.filter(F.col("term") == term)
+            self._postings.filter(F.col("term").isin(list(terms)))
             .select("docs_vb", "tfs_vb", "norms_b", "pos_vb")
             .mapInPandas(decode_positions, schema=pos_row_schema)
         )

@@ -7,6 +7,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_heap() -> str:
+    """A quarter of physical RAM, at most 24g. Local mode runs driver and
+    executors in one JVM, and a heap sized above what the host has lets
+    the JVM grow until the kernel's OOM killer ends it."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24, max(1, ram // 4 // 2**30))}g"
+
+
 def get_spark(
     cpus: int | None = None,
     app_name: str = "lucene_spark",
@@ -39,7 +47,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_heap())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 import numpy as np
@@ -57,15 +58,16 @@ from lucene_spark.index.builder import (
     INVERT_SCHEMA,
     _flatten_key,
     _invert_partition,
-    _merge_runs_to_blocks,
     _META_COLS,
     _quantile_bounds,
     _repartition_exact,
     _RUN_COLS,
     _salt_runs,
     _with_range_id,
+    merge_postings,
 )
 from lucene_spark.index.resumable import _atomic_json
+from lucene_spark.util.metaio import terms_path
 
 
 def _state_path(out_dir: str) -> str:
@@ -80,7 +82,7 @@ def _load_index_options(out_dir: str) -> dict | None:
     """Index-wide payload options pinned at the FIRST write_segment.
     store_positions/store_offsets are facts about the data on disk, not
     per-call arguments: mixing them across segments of one index would
-    misalign merged payloads (builder._merge_runs_to_blocks guards the
+    misalign merged payloads (builder._merge_group guards the
     symptom; this pins the cause). Returns None for pre-option indexes."""
     p = _options_path(out_dir)
     if os.path.exists(p):
@@ -211,8 +213,6 @@ def write_segment(
     inv.filter(F.col("term").isNotNull()).select(*_RUN_COLS).write.mode(
         "overwrite"
     ).parquet(os.path.join(out_dir, "runs", f"seg={seg_name}"))
-    import shutil
-
     shutil.rmtree(inv_path, ignore_errors=True)
     return acc - doc_id_start
 
@@ -262,6 +262,25 @@ def start_indexing_stream(
     return writer.start()
 
 
+# A generation is sized by its data, not by the cluster's width: every
+# query opens every live generation's files, so a small refresh must not
+# write one file per core (1 MB = AQE's minimum coalesced partition size,
+# which sized generations when their merge ran behind a shuffle)
+GEN_PART_MIN_BYTES = 1 << 20
+
+
+def _gen_parts(paths: list[str], n_part: int) -> int:
+    """Merge partitions (= postings files) for a generation whose input
+    parquet lives under ``paths``: one per GEN_PART_MIN_BYTES, 1..n_part."""
+    size = sum(
+        os.path.getsize(os.path.join(root, f))
+        for p in paths
+        for root, _, files in os.walk(p)
+        for f in files
+    )
+    return max(1, min(n_part, size // GEN_PART_MIN_BYTES))
+
+
 def _merge_runs_to_gen(
     spark: SparkSession,
     out_dir: str,
@@ -298,13 +317,12 @@ def _merge_runs_to_gen(
         .select("term")
         .withColumn("is_hot", F.lit(True))
     )
-    (
-        _salt_runs(runs, hot_df, hot_df.count(), hot_salt_span)
-        .groupBy("term", "salt")
-        .applyInPandas(_merge_runs_to_blocks, schema=BLOCK_SCHEMA)
-        .sortWithinPartitions("term", "salt", "block_seq")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "postings", f"gen={gen_name}"))
+    merge_postings(
+        spark,
+        _salt_runs(runs, hot_df, hot_df.count(), hot_salt_span),
+        tg,
+        os.path.join(out_dir, "postings", f"gen={gen_name}"),
+        _gen_parts(run_paths, n_part),
     )
 
 
@@ -404,6 +422,7 @@ def _compact_gens(
     out_dir: str,
     group: list[dict],
     gen_name: str,
+    n_part: int,
     deleted: np.ndarray | None = None,
 ) -> None:
     """Tiered compaction: re-merge a group of generations into one. Block
@@ -436,12 +455,13 @@ def _compact_gens(
         blocks = blocks.mapInPandas(
             _drop_deleted_rows(del_b), schema=_COMPACT_RUN_SCHEMA
         )
-    (
-        blocks.groupBy("term", "salt")
-        .applyInPandas(_merge_runs_to_blocks, schema=BLOCK_SCHEMA)
-        .sortWithinPartitions("term", "salt", "block_seq")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "postings", f"gen={gen_name}"))
+    tpaths = [os.path.join(out_dir, "terms_gens", f"gen={g['gen']}") for g in group]
+    merge_postings(
+        spark,
+        blocks,
+        spark.read.parquet(*tpaths),
+        os.path.join(out_dir, "postings", f"gen={gen_name}"),
+        _gen_parts(paths, n_part),
     )
     if has_deletes:
         # per-gen stats must reflect the dropped docs: recompute from the
@@ -479,7 +499,6 @@ def _compact_gens(
             .parquet(os.path.join(out_dir, "terms_gens", f"gen={gen_name}"))
         )
         return
-    tpaths = [os.path.join(out_dir, "terms_gens", f"gen={g['gen']}") for g in group]
     (
         spark.read.parquet(*tpaths)
         .groupBy("term")
@@ -545,10 +564,15 @@ def refresh(
 
     The searcher reads postings/gen=* partition-pruned to the manifest's
     active generation list, so stale dirs from a crash mid-cleanup are
-    invisible. The terms table's lb_key10 threshold floor is RECOMPUTED
-    here against refresh-time stats (avgdl drifts as the corpus grows,
-    so the build-time floor would be stale — recomputing per refresh
-    keeps the single-job pruned fast path available on NRT indexes).
+    invisible. The terms table goes to a fresh terms/v=N dir named in
+    the manifest; what this refresh replaces (the prior terms table and
+    the generations it compacts) is recorded in state["retired"] and
+    deleted by the NEXT refresh, so a searcher opened on the prior
+    manifest keeps working through one refresh. The terms table's
+    lb_key10 threshold floor is RECOMPUTED here against refresh-time
+    stats (avgdl drifts as the corpus grows, so the build-time floor
+    would be stale — recomputing per refresh keeps the single-job pruned
+    fast path available on NRT indexes).
     Pass segs_per_tier=1 to force full compaction (bit-identical to the
     one-shot batch build)."""
     n_part = partitions or spark.sparkContext.defaultParallelism
@@ -627,7 +651,7 @@ def refresh(
             break
         for group in groups:
             gname = _next_gen()
-            _compact_gens(spark, out_dir, group, gname, deleted=deleted)
+            _compact_gens(spark, out_dir, group, gname, n_part, deleted=deleted)
             names = {g["gen"] for g in group}
             for g in group:
                 old_dirs.append(os.path.join(out_dir, "postings", f"gen={g['gen']}"))
@@ -678,19 +702,26 @@ def refresh(
     lb10 = lb10_by_term(
         spark, os.path.join(out_dir, "postings"), cache, gens=active
     )
-    terms_new = os.path.join(out_dir, "terms_new")
+    # each refresh publishes its terms table into a fresh directory that
+    # the manifest names: a searcher still open on the prior manifest
+    # keeps reading its own table (and its own generations, compacted
+    # above), which are deleted by the NEXT refresh, not this one
+    n_terms = state.get("next_terms", 0)
+    state["next_terms"] = n_terms + 1
+    terms_dir = os.path.join("terms", f"v={n_terms:06d}")
     terms_all.join(lb10, "term", "left").sortWithinPartitions("term").write.mode(
         "overwrite"
-    ).parquet(terms_new)
-
-    import shutil
-
-    terms_final = os.path.join(out_dir, "terms")
-    terms_old = terms_final + ".old"
-    shutil.rmtree(terms_old, ignore_errors=True)
-    if os.path.isdir(terms_final):
-        os.replace(terms_final, terms_old)
-    os.replace(terms_new, terms_final)
+    ).parquet(os.path.join(out_dir, terms_dir))
+    if prior_manifest is not None:
+        if "terms_dir" in prior_manifest:
+            old_dirs.append(terms_path(out_dir, prior_manifest))
+        elif os.path.isdir(os.path.join(out_dir, "terms")):
+            # flat terms/ of an index published before versioned tables
+            flat = os.path.join(out_dir, "terms")
+            old_dirs += [
+                os.path.join(flat, f) for f in os.listdir(flat)
+                if os.path.isfile(os.path.join(flat, f))
+            ]
 
     stats = {
         # next_doc is the docID high-water mark (maxDoc analog);
@@ -725,14 +756,20 @@ def refresh(
         "num_gens": len(gens),
         "merged_new_segments": touched,
         "compacted_gens": compacted,
+        "terms_dir": terms_dir,
     }
     if state.get("expunged_at"):
         manifest["expunged_at"] = state["expunged_at"]
+    retired_before = state.get("retired", [])
+    state["retired"] = [os.path.relpath(d, out_dir) for d in old_dirs]
     _atomic_json(os.path.join(out_dir, "manifest.json"), manifest)
     _atomic_json(_state_path(out_dir), state)
-    shutil.rmtree(terms_old, ignore_errors=True)
-    for d in old_dirs:
-        shutil.rmtree(d, ignore_errors=True)
+    for rel in retired_before:
+        path = os.path.join(out_dir, rel)
+        if os.path.isdir(path):
+            shutil.rmtree(path, ignore_errors=True)
+        elif os.path.exists(path):
+            os.remove(path)
     return manifest
 
 
@@ -762,8 +799,6 @@ def force_merge(
     are written first (stale extras until committed), state is updated,
     then refresh() republishes the manifest — THE commit point — and
     only then are the old generation dirs removed."""
-    import shutil
-
     from lucene_spark.index.deletes import load_deleted_ids
 
     if int(max_num_gens) < 1:
@@ -795,6 +830,7 @@ def force_merge(
         cum += int(g["num_docs"])
 
     deleted = load_deleted_ids(spark, out_dir)
+    n_part = partitions or spark.sparkContext.defaultParallelism
     old_dirs: list[str] = []
     for group in groups:
         if len(group) < 2:
@@ -802,7 +838,7 @@ def force_merge(
         n = state.get("next_gen", 0)
         state["next_gen"] = n + 1
         gname = f"g{n:06d}"
-        _compact_gens(spark, out_dir, group, gname, deleted=deleted)
+        _compact_gens(spark, out_dir, group, gname, n_part, deleted=deleted)
         names = {g["gen"] for g in group}
         for g in group:
             old_dirs.append(
@@ -860,8 +896,6 @@ def expunge_deletes_tiered(
     docIDs of survivors are preserved (sparse docID space, same as the
     batch expunge); statistics are recomputed, so scores change exactly
     as Lucene's do after the merge that applies deletes."""
-    import shutil
-
     from lucene_spark.index.deletes import load_deleted_ids, _deletes_dir
 
     refresh(
@@ -891,6 +925,7 @@ def expunge_deletes_tiered(
         return n
 
     gens: list[dict] = state["gens"]
+    n_part = partitions or spark.sparkContext.defaultParallelism
     old_dirs: list[str] = []
     total_dropped = 0
     for g in list(gens):
@@ -900,7 +935,7 @@ def expunge_deletes_tiered(
         n = state.get("next_gen", 0)
         state["next_gen"] = n + 1
         gname = f"g{n:06d}"
-        _compact_gens(spark, out_dir, [g], gname, deleted=deleted)
+        _compact_gens(spark, out_dir, [g], gname, n_part, deleted=deleted)
         old_dirs.append(os.path.join(out_dir, "postings", f"gen={g['gen']}"))
         old_dirs.append(os.path.join(out_dir, "terms_gens", f"gen={g['gen']}"))
         gens[:] = [x for x in gens if x["gen"] != g["gen"]]
@@ -1145,7 +1180,7 @@ def add_indexes(
 
     # 2. per-gen term stats from the source's global terms table
     (
-        spark.read.parquet(os.path.join(src_dir, "terms"))
+        spark.read.parquet(terms_path(src_dir, src_m))
         .select(
             "term",
             F.col("df").cast("long").alias("df"),

@@ -40,3 +40,11 @@ def write_meta_parquet(path: str, rows: list[dict]) -> None:
         os.replace(path, old)
     os.replace(tmp, path)
     shutil.rmtree(old, ignore_errors=True)
+
+
+def terms_path(index_dir: str, manifest: dict) -> str:
+    """The terms table a manifest commits. Each NRT refresh publishes its
+    table into a fresh directory named by ``manifest["terms_dir"]``, so a
+    searcher still open on an older manifest keeps reading its own table;
+    batch indexes keep the single ``terms/`` table."""
+    return os.path.join(index_dir, manifest.get("terms_dir", "terms"))

@@ -132,7 +132,9 @@ def test_tiered_refresh_touches_only_new_segments(spark, tmp_path):
     build_index(spark, spark.createDataFrame(generate_corpus(n)), ref, partitions=4)
 
     def fp(idx):
-        df = spark.read.parquet(os.path.join(idx, "postings"))
+        # the live postings are the manifest's generations: the ones the
+        # compacting refresh replaced stay on disk until the next refresh
+        df = IndexSearcher(spark, idx)._postings
         return df.select(
             F.sum(F.crc32("docs_vb")).alias("d"),
             F.sum(F.crc32("tfs_vb")).alias("t"),
@@ -287,3 +289,61 @@ def test_lb10_fast_path_on_refreshed_index(spark, tmp_path):
         )
         got = [(r["docID"], r["score"]) for r in pruned_df.collect()]
         assert got == exp, f"fast-path pruned != unpruned for {query!r}"
+
+
+def test_open_searcher_survives_compacting_refresh(spark, tmp_path):
+    """A searcher opened before a refresh keeps answering, with its own
+    pre-refresh top-k, after a refresh that compacts every generation
+    (segs_per_tier=1) and publishes a new terms table: refresh() leaves
+    what it replaces on disk, and the NEXT refresh deletes it."""
+    from lucene_spark.streaming.incremental import (
+        _atomic_json,
+        _load_state,
+        _state_path,
+        write_segment,
+    )
+
+    out = str(tmp_path / "race_idx")
+    os.makedirs(out)
+    n, n_chunks = 180, 3
+    pdf = generate_corpus(n).sort_values(["repo", "path", "commit"]).reset_index(drop=True)
+    per = n // n_chunks
+
+    def add_segment(c):
+        part = pdf.iloc[c * per:(c + 1) * per]
+        state = _load_state(out)
+        nd = write_segment(
+            spark, spark.createDataFrame(part), out, f"s{c}",
+            state["next_doc"], partitions=2,
+        )
+        state["next_doc"] += nd
+        state["segments"].append({"seg": f"s{c}", "num_docs": nd})
+        _atomic_json(_state_path(out), state)
+
+    for c in range(n_chunks - 1):
+        add_segment(c)
+        refresh(spark, out, partitions=2)
+
+    old = IndexSearcher(spark, out)
+    assert len(old.manifest["gens"]) == n_chunks - 1
+    queries = [("return value table", "or"), ("value table", "and")]
+
+    def top(s):
+        return [
+            [(r["docID"], r["score"]) for r in s.search(q, k=10, mode=m).collect()]
+            for q, m in queries
+        ]
+
+    before = top(old)
+    add_segment(n_chunks - 1)
+    m = refresh(spark, out, partitions=2, segs_per_tier=1)
+    assert m["compacted_gens"] > 0 and m["num_gens"] == 1
+    assert m["terms_dir"] != old.manifest["terms_dir"]
+    assert top(old) == before  # the replaced generations are still on disk
+
+    # the next refresh deletes what the compacting refresh replaced
+    refresh(spark, out, partitions=2)
+    for g in old.manifest["gens"]:
+        assert not os.path.exists(os.path.join(out, "postings", f"gen={g}"))
+    assert not os.path.exists(os.path.join(out, old.manifest["terms_dir"]))
+    assert len(top(IndexSearcher(spark, out))[0]) == 10
